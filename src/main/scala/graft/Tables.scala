@@ -72,11 +72,12 @@ object Tables {
     * warehouse-scale scan is already wider, so this is a no-op there
     * (no new exchange). The explicit count is exempt from AQE
     * coalescing by design: these stages are CPU-bound and byte-tiny,
-    * exactly the shape byte-based coalescing mis-sizes.
+    * exactly the shape byte-based coalescing mis-sizes. A frame not
+    * rooted in files (no width estimate) is left alone.
     */
   def widen(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (estimatedScanWidth(df).forall(_ < p)) df.repartition(p) else df
+    if (estimatedScanWidth(df).exists(_ < p)) df.repartition(p) else df
   }
 
   /** Estimated scan-task width of a SCAN-ROOTED frame from file

@@ -20,24 +20,39 @@ import graft.store.PatientIndex
   * (P3) → driver-side MLP forward (O(1)) → literal array broadcast into a
   * per-row cosine expression → window local top-k per hospital →
   * TakeOrderedAndProject global top-k → one conditional-agg stats pass.
+  *
+  * The served index is cached one partition per hospital
+  * ([[graft.store.PatientIndex.serve]]), whether built or reloaded, so
+  * the per-hospital window runs shard-local with no Exchange: a request
+  * is one task per shard plus the merge, not a scan of every generator
+  * partition and a shuffle of the whole index.
   */
 class PatientSearch(spark: SparkSession) {
 
   private var patients: Option[DataFrame] = None
+  // number of hospitals set up; the built index gets one partition each
+  private var nShards = 0
   private var weights: Mlp.Weights = Mlp.init()
-  private var index: Option[DataFrame] = None
-  // per-shard row counts, computed ONCE at index build/load — the search
-  // path must not rescan the corpus for bookkeeping (at warehouse scale
-  // that is two extra full scans per query)
-  private var shardSizes: Option[Map[String, Long]] = None
+  // the served index with its per-shard row counts, computed ONCE at
+  // index build/load — the search path must not rescan the corpus for
+  // bookkeeping (at warehouse scale that is two extra full scans per query)
+  private var served: Option[(DataFrame, Map[String, Long])] = None
 
   /** Trained-model / index accessors (for tests and reuse). */
   def globalWeights: Mlp.Weights = weights
-  def vectorIndex: Option[DataFrame] = index
+  def vectorIndex: Option[DataFrame] = served.map(_._1)
 
   private def computeShardSizes(idx: DataFrame): Map[String, Long] =
     idx.groupBy(col("hospital")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** Serve `idx` (cached by [[PatientIndex.serve]]): its shard sizes are
+    * counted here, which also materializes the cache.
+    */
+  private def install(idx: DataFrame): DataFrame = {
+    served = Some(idx -> computeShardSizes(idx))
+    idx
+  }
 
   /** setup_hospitals (similarity_search.py:419-434): generate shards,
     * z-score per hospital (the reference normalizes each client against
@@ -51,6 +66,7 @@ class PatientSearch(spark: SparkSession) {
       // keep raw outcome columns for metadata (z-scored features live in the array)
       .cache()
     patients = Some(withFeatures)
+    nShards = configs.map(_._1).distinct.size
     withFeatures
   }
 
@@ -65,26 +81,27 @@ class PatientSearch(spark: SparkSession) {
   /** generate_and_store_embeddings (similarity_search.py:495-539). */
   def generateAndStoreEmbeddings(): DataFrame = {
     val df = patients.getOrElse(sys.error("setupHospitals first"))
-    val built = PatientIndex.build(FederatedTrainer.withEmbeddings(df, weights))
-    index = Some(built)
-    shardSizes = Some(computeShardSizes(built))
-    built
+    install(PatientIndex.build(FederatedTrainer.withEmbeddings(df, weights), nShards))
   }
 
   /** Persist the built index shard-partitioned (the durable form of the
     * reference's in-memory store — reads prune to one hospital's
-    * directories; see [[graft.sources.TableIO]]).
+    * directories; see [[graft.sources.TableIO]]). The index is clustered
+    * by hospital, so each `hospital=` directory gets one file.
     */
   def persistIndex(path: String): Unit =
     graft.sources.TableIO.writeIndex(
-      index.getOrElse(sys.error("generateAndStoreEmbeddings first")), path)
+      vectorIndex.getOrElse(sys.error("generateAndStoreEmbeddings first")), path)
 
-  /** Reload a persisted index into this facade (cold-start serving). */
+  /** Reload a persisted index into this facade (cold-start serving),
+    * served one partition per `hospital=` directory — counted from the
+    * file listing, so no job runs to find it.
+    */
   def loadIndex(path: String): DataFrame = {
-    val loaded = graft.sources.TableIO.readIndex(spark, path).cache()
-    index = Some(loaded)
-    shardSizes = Some(computeShardSizes(loaded))
-    loaded
+    val loaded = graft.sources.TableIO.readIndex(spark, path)
+    val shardDirs = loaded.inputFiles
+      .map(f => new org.apache.hadoop.fs.Path(f).getParent).distinct.length
+    install(PatientIndex.serve(loaded, shardDirs))
   }
 
   /** search_similar_patients (similarity_search.py:541-559 → 322-363).
@@ -100,14 +117,29 @@ class PatientSearch(spark: SparkSession) {
 
   /** §2.12 parity: `SecureMultiPartyComputation.secure_similarity_search`
     * (similarity_search.py:322-363) — scatter-gather over the shard
-    * boundary from a raw query embedding. "Secure" in the reference means
-    * only local top-k winners leave each shard; here that is literally
-    * the dataflow: the window's local filter runs shard-side and only
-    * n_shards × k candidate rows reach the global merge.
+    * boundary from a raw query embedding; see [[PatientSearch.search]].
     */
   def secureSimilaritySearch(qEmbedding: Array[Float], topK: Int = 10): PatientSearch.Result = {
-    val idx = index.getOrElse(sys.error("generateAndStoreEmbeddings first"))
+    val (idx, sizes) = served.getOrElse(sys.error("generateAndStoreEmbeddings first"))
+    PatientSearch.search(idx, sizes, qEmbedding, topK)
+  }
+}
 
+object PatientSearch {
+  /** Search result shape (similarity_search.py:359-363). */
+  case class Result(topSimilarPatients: DataFrame, totalSearched: Long,
+                    transplantStatistics: DataFrame, clinicalInsights: DataFrame)
+
+  /** The search body over an index and its per-shard row counts. "Secure"
+    * in the reference means only local top-k winners leave each shard;
+    * here that is literally the dataflow: over an index clustered by
+    * hospital the window's local filter runs inside each shard's
+    * partition, and only n_shards × k candidate rows reach the global
+    * merge. Over any other layout the result is the same, after a
+    * shuffle of the index.
+    */
+  private[search] def search(idx: DataFrame, shardSizes: Map[String, Long],
+                              qEmbedding: Array[Float], topK: Int): Result = {
     val sim = graft.functions.VectorFunctions
       .cosineSimilarity(col("embedding"), typedlit(qEmbedding.toSeq))
 
@@ -134,23 +166,13 @@ class PatientSearch(spark: SparkSession) {
 
     // total_searched is the reference's candidate-pool size,
     // len(all_results) (similarity_search.py:361): each shard contributes
-    // min(k, |shard|) local winners. Shard sizes were computed once at
-    // index build/load — NO corpus scan happens on the search path.
-    val sizes = shardSizes.getOrElse {
-      val s = computeShardSizes(idx); shardSizes = Some(s); s
-    }
-    PatientSearch.Result(
+    // min(k, |shard|) local winners
+    Result(
       topSimilarPatients = hits,
-      totalSearched = sizes.valuesIterator.map(math.min(_, topK.toLong)).sum,
+      totalSearched = shardSizes.valuesIterator.map(math.min(_, topK.toLong)).sum,
       transplantStatistics = TransplantStats.statisticsBlock(hits),
       clinicalInsights = TransplantStats.clinicalInsights(hits))
   }
-}
-
-object PatientSearch {
-  /** Search result shape (similarity_search.py:359-363). */
-  case class Result(topSimilarPatients: DataFrame, totalSearched: Long,
-                    transplantStatistics: DataFrame, clinicalInsights: DataFrame)
 
   /** Compat alias parity: `HospitalVectorDB = HospitalVectorStorage`
     * (similarity_search.py:316) — here the "storage" IS the index

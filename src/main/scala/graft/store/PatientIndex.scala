@@ -4,13 +4,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** S3/P4 — the "vector store": one DataFrame of
-  * (patient_id, hospital, embedding[128], metadata struct), cached.
+  * (patient_id, hospital, embedding[128], metadata struct), cached one
+  * partition per hospital.
   *
   * The reference's per-hospital dict + dense-matrix rebuild
   * (similarity_search.py:263-292) collapses to a cached columnar
   * DataFrame: the shard boundary is the `hospital` column, id↔metadata
   * alignment is simply row-wise column co-location (no join needed —
-  * SURVEY.md §2.3), and "rebuild matrix" is `.cache()`.
+  * SURVEY.md §2.3), and "rebuild matrix" is [[serve]]: cluster by
+  * `hospital`, then `.cache()`.
   */
 object PatientIndex {
 
@@ -46,10 +48,10 @@ object PatientIndex {
 
   /** Build + cache the index from an embedded patient DataFrame
     * (generateAndStoreEmbeddings' storage half,
-    * similarity_search.py:509-537).
+    * similarity_search.py:509-537), served as [[serve]] lays it out.
     */
-  def build(embedded: DataFrame): DataFrame =
-    embedded.select(
+  def build(embedded: DataFrame, nShards: Int): DataFrame =
+    serve(embedded.select(
       col("patient_id"), col("hospital"), col("embedding"),
       metadataStruct.as("metadata"),
       // promoted outcome fields for easy access (similarity_search.py:344-349)
@@ -60,6 +62,18 @@ object PatientIndex {
         .otherwise(0.0).as("days_to_transplant"),
       col("transplant_date"),
       when(col("received_transplant") === 0, col("waitlist_status"))
-        .otherwise(0).cast("int").as("waitlist_status"))
-      .cache()
+        .otherwise(0).cast("int").as("waitlist_status")), nShards)
+
+  /** Cache an index clustered by `hospital` into `nShards` partitions —
+    * the reference's one dense matrix per hospital. The cached relation
+    * reports hash partitioning on `hospital`, so a per-hospital window
+    * over it plans with no Exchange: each shard's local top-k runs inside
+    * its own partition and only its winners leave it. Hashing may put two
+    * shards in one partition, never one shard in two, so `nShards` sets
+    * only the task count, not the result. Clustering happens after the
+    * embedding: the generator's pinned partitioning, and with it every
+    * seeded draw, z-score and training input, is untouched.
+    */
+  def serve(index: DataFrame, nShards: Int): DataFrame =
+    index.repartition(nShards.max(1), col("hospital")).cache()
 }

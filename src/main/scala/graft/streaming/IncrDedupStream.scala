@@ -105,18 +105,13 @@ object IncrDedupStream extends QueryPack {
         // no read of each other) and all must land before the checkpoint
         // commit — overlap them (guide §2.6) so the tick pays one write
         // tail, not three in sequence.
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val writes = Seq(
-          Future(pairs.write.mode(SaveMode.Overwrite)
-            .parquet(s"$resultsP/batch_id=$id")),
-          Future(batch.write.mode(SaveMode.Overwrite)
-            .parquet(s"$docsP/batch_id=$id")),
-          Future(IncrementalDedup.absorbBatch(batch, s"$bandsP/batch_id=$id",
-            mode = SaveMode.Overwrite)))
-        writes.foreach(Await.result(_,
-          scala.concurrent.duration.Duration(1, "hour")))
-        ()
+        writeOverlapped(
+          () => pairs.write.mode(SaveMode.Overwrite)
+            .parquet(s"$resultsP/batch_id=$id"),
+          () => batch.write.mode(SaveMode.Overwrite)
+            .parquet(s"$docsP/batch_id=$id"),
+          () => IncrementalDedup.absorbBatch(batch, s"$bandsP/batch_id=$id",
+            mode = SaveMode.Overwrite))
       }
       .option("checkpointLocation", s"$statePath/checkpoint")
       .trigger(Trigger.AvailableNow())
@@ -134,6 +129,20 @@ object IncrDedupStream extends QueryPack {
           spark.sparkContext.emptyRDD[Row],
           StructType.fromDDL("a_id BIGINT, b_id BIGINT, jac DOUBLE"))
     }
+  }
+
+  /** Run independent writes overlapped and return once ALL have settled;
+    * the first failure (in argument order) is rethrown only then, so a
+    * failed micro-batch never leaves a sibling write running detached
+    * against the scope its retry will overwrite.
+    */
+  private[streaming] def writeOverlapped(writes: (() => Unit)*): Unit = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    writes.map(w => Future(w()))
+      .map(f => Await.ready(f, Duration(1, "hour")).value.get)
+      .foreach(_.get)
   }
 
   /** Highest batch id the checkpoint has COMMITTED — the safe compaction

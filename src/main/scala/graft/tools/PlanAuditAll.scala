@@ -126,7 +126,7 @@ object PlanAuditAll {
         maxTasks.set(0)
         val df = fn(spark, sfDir)
         df.collect()
-        Thread.sleep(50) // listener bus drain
+        org.apache.spark.sql.GraftListenerBridge.drain(spark.sparkContext)
         val qe = df.queryExecution
         val plan = qe.explainString(
           org.apache.spark.sql.execution.FormattedMode)

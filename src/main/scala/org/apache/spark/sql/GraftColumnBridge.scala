@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge to the `private[sql]` Column ⇄ Expression converters — the
@@ -10,6 +11,15 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+}
+
+/** Bridge to the `private[spark]` listener bus: returns once every event
+  * posted so far has reached every listener. The scheduler posts a job's
+  * stage and end events before the action that ran it returns, so after
+  * an action this is a deterministic drain where a fixed sleep is a guess.
+  */
+object GraftListenerBridge {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
 
 /** Bridge to the `private[sql]` streaming-frame constructor: a V1

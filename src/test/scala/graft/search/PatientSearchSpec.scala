@@ -1,8 +1,18 @@
 package graft.search
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftListenerBridge
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.feat.Normalization
+import graft.gen.PatientGenerator
+import graft.model.Mlp
 import graft.schema.PatientSchema
 
 /** E2E pipeline + scatter-gather invariants (SURVEY.md §5.3/§5.4).
@@ -12,6 +22,7 @@ import graft.schema.PatientSchema
 class PatientSearchSpec extends SparkSpec {
 
   private val topK = 5
+  private val nShards = 3
 
   private lazy val system: (PatientSearch, PatientSearch.Result) = {
     val ps = new PatientSearch(spark)
@@ -20,6 +31,61 @@ class PatientSearchSpec extends SparkSpec {
     assert(losses.nonEmpty && losses.forall(l => !l.isNaN))
     ps.generateAndStoreEmbeddings()
     (ps, ps.searchSimilarPatients(PatientSchema.demoQueryPatient, topK))
+  }
+
+  /** The exchanges between the per-hospital window of a hits frame and
+    * the cached index it reads (the index cache's own plan excluded).
+    */
+  private def exchangesBelowShardWindow(hits: DataFrame): Seq[SparkPlan] = {
+    def tree(p: SparkPlan, intoCache: Boolean): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => tree(a.executedPlan, intoCache)
+      case q: QueryStageExec => tree(q.plan, intoCache)
+      case m: InMemoryTableScanExec if intoCache => tree(m.relation.cachedPlan, intoCache)
+      case _ => p.children.flatMap(tree(_, intoCache))
+    })
+    val windows = tree(hits.queryExecution.executedPlan, intoCache = true).collect {
+      case w: WindowExec if w.partitionSpec.exists(_.references.exists(_.name == "hospital")) => w
+    }
+    assert(windows.size == 1)
+    tree(windows.head, intoCache = false).collect { case e: Exchange => e }
+  }
+
+  private val seededQueries: Seq[Map[String, Double]] = {
+    val rnd = new scala.util.Random(7)
+    Seq.fill(5)(PatientSchema.demoQueryPatient.map { case (f, v) =>
+      f -> v * (0.7 + 0.6 * rnd.nextDouble()) })
+  }
+
+  /** The facade's served index has at most n_shards partitions, its
+    * searches run the shard window with no Exchange below it, and hits
+    * and both statistics blocks equal exactly those of the same search
+    * body over an unclustered copy of the index (the pre-clustering
+    * layout: genPartitions partitions per shard).
+    */
+  private def assertServedShardLocal(ps: PatientSearch): Unit = {
+    val idx = ps.vectorIndex.get
+    assert(idx.rdd.getNumPartitions <= nShards)
+    val sizes = idx.groupBy("hospital").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val unclustered = idx.repartition(PatientGenerator.genPartitions * nShards).cache()
+    try seededQueries.foreach { q =>
+      val emb = Mlp.forward(ps.globalWeights, Normalization.prepareQueryFeatures(q))
+      val served = ps.secureSimilaritySearch(emb, topK)
+      val plain = PatientSearch.search(unclustered, sizes, emb, topK)
+      try {
+        assert(served.topSimilarPatients.collect().toSeq ==
+          plain.topSimilarPatients.collect().toSeq)
+        assert(served.transplantStatistics.collect().toSeq ==
+          plain.transplantStatistics.collect().toSeq)
+        assert(served.clinicalInsights.collect().toSeq ==
+          plain.clinicalInsights.collect().toSeq)
+        assert(served.totalSearched == plain.totalSearched)
+        assert(exchangesBelowShardWindow(served.topSimilarPatients).isEmpty,
+          "the served index must feed the shard window without a shuffle")
+        assert(exchangesBelowShardWindow(plain.topSimilarPatients).nonEmpty,
+          "an unclustered index needs an Exchange below the shard window")
+      } finally Seq(served, plain).foreach(_.topSimilarPatients.unpersist())
+    } finally unclustered.unpersist()
   }
 
   test("index holds one 128-dim embedding + metadata struct per patient") {
@@ -77,7 +143,7 @@ class PatientSearchSpec extends SparkSpec {
     try {
       val r = ps.searchSimilarPatients(PatientSchema.demoQueryPatient, topK)
       assert(r.totalSearched == 3L * topK)
-      Thread.sleep(500) // listener bus is async; let any job event land
+      GraftListenerBridge.drain(spark.sparkContext)
       assert(jobs == 0,
         s"search construction must not scan the corpus, saw $jobs jobs")
     } finally spark.sparkContext.removeSparkListener(listener)
@@ -101,6 +167,11 @@ class PatientSearchSpec extends SparkSpec {
     }
   }
 
+  test("built index is served one partition per hospital: shard-local " +
+    "window, results equal an unclustered copy's") {
+    assertServedShardLocal(system._1)
+  }
+
   test("index persists shard-partitioned and search works after reload") {
     val (ps, before) = system
     val dir = java.nio.file.Files.createTempDirectory("graft_psearch").toString
@@ -114,6 +185,20 @@ class PatientSearchSpec extends SparkSpec {
     val idsAfter = after.topSimilarPatients.select("patient_id")
       .collect().map(_.getString(0)).toSeq
     assert(idsAfter == idsBefore, "cold-start search must reproduce results")
+  }
+
+  test("persisted index has one file per hospital directory; the reloaded " +
+    "index is served one partition per hospital") {
+    val ps = system._1
+    val dir = java.nio.file.Files.createTempDirectory("graft_psearch_layout")
+    ps.persistIndex(dir.toString)
+    val shardDirs = dir.toFile.listFiles().filter(_.getName.startsWith("hospital="))
+    assert(shardDirs.length == nShards)
+    shardDirs.foreach { d =>
+      assert(d.listFiles().count(_.getName.endsWith(".parquet")) == 1, d.getName)
+    }
+    ps.loadIndex(dir.toString)
+    assertServedShardLocal(ps)
   }
 
   test("transplant_date presentation uses the reference's 'N/A' sentinel") {

@@ -12,6 +12,18 @@ class IncrDedupStreamSpec extends SparkSpec {
     df.select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
+  test("a failed state write is rethrown only after its sibling writes settle") {
+    val settled = new java.util.concurrent.atomic.AtomicInteger(0)
+    def slowWrite(): Unit = { Thread.sleep(300); settled.incrementAndGet() }
+    val e = intercept[java.io.IOException] {
+      IncrDedupStream.writeOverlapped(
+        () => throw new java.io.IOException("injected write failure"),
+        () => slowWrite(), () => slowWrite())
+    }
+    assert(e.getMessage == "injected write failure")
+    assert(settled.get == 2, "a state write was still in flight when the batch failed")
+  }
+
   test("two-batch stream over the whole corpus = one-shot pair set, " +
     "and a LATER stream continues from the same state") {
     val docs = Tables.documents(spark, sfDir)
